@@ -56,6 +56,16 @@ ARCHITECTURES: dict[str, dict] = {
               "fusion": "mean_shared"},
 }
 
+# embeddings concatenated per fusion rule (operators/inference.ae_forward)
+_FUSED_PARTS = {"joint": 1, "concat": 2, "concat_joint": 3, "mean_shared": 3}
+
+
+def embedding_dim(arch: str) -> int:
+    """Width of the embedding ``arch`` produces: the code width times
+    the number of codes its fusion rule concatenates."""
+    spec = ARCHITECTURES[arch]
+    return spec["enc"][-1] * _FUSED_PARTS[spec["fusion"]]
+
 
 def _seed(name: str) -> int:
     return int(hashlib.md5(name.encode()).hexdigest()[:12], 16)

@@ -26,12 +26,28 @@ Scale design: TWO distributed passes over the data, total.
    exact, partition-order independent); only log/ln is sub-ulp
    engine-variant, which can flip an argmax only on near-exact
    score ties.
+
+Several feature sets, one pass each (gaussian_nb_cv_accuracy_sets):
+a report comparing feature sets of the same samples (raw views, their
+concatenation, embeddings) shares both passes instead of paying two
+per set. A set is an ordered list of base vector columns of one
+frame; the statistics pass explodes the concatenation of all base
+columns once, each set's cells are sliced out of those per-dim cells
+and assembled by the same _assemble_model (so each set keeps its own
+adaptive epsilon and priors), and one Arrow mapInPandas pass scores
+every row against every set's broadcast model. The job count is
+fixed whatever the number of sets. gaussian_nb_cv_accuracy_wide is
+the one-set case.
 """
 
 from __future__ import annotations
 
+import bisect
 import math
+from collections.abc import Iterator
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -153,9 +169,9 @@ def gaussian_nb_cv_accuracy(
     return _fold_accuracy(pred)
 
 
-def _fold_accuracy(pred: DataFrame) -> DataFrame:
+def _fold_accuracy(pred: DataFrame, keys: tuple[str, ...] = ("fold",)) -> DataFrame:
     return (
-        pred.groupBy("fold")
+        pred.groupBy(*keys)
         .agg(
             F.count(F.lit(1)).alias("n_test"),
             (
@@ -163,7 +179,7 @@ def _fold_accuracy(pred: DataFrame) -> DataFrame:
                 / F.count(F.lit(1)).cast("double")
             ).alias("accuracy"),
         )
-        .orderBy("fold")
+        .orderBy(*keys)
     )
 
 
@@ -247,48 +263,143 @@ def gaussian_nb_cv_accuracy_wide(
 ) -> DataFrame:
     """C6 at WIDE vector dimensionality (the reference's raw 20,531-
     feature Gene view, nb_classification.py on the un-embedded
-    inputs). Identical model to gaussian_nb_cv_accuracy — same
-    fixed-point sufficient statistics (one shuffle), same driver
-    assembly, same per-dim Q30-quantized log-likelihood and
-    score-then-smallest-class tie-break — but the scoring pass is an
-    Arrow-batched numpy kernel with the model BROADCAST instead of a
-    per-class row-expansion join: at d=21,577 the relational scorer
-    explodes 1,866 rows into 40M (dim, x) rows and re-expands them
-    x classes through a hash aggregation, all to compute what is one
-    (batch x dim) @ per-class reduction — the classic case where the
-    built-in operators genuinely can't express the batch-matrix
-    semantics efficiently and a Pandas-batched kernel is the scale
-    path. Scoring shuffles NOTHING (one final fold-count agg only).
-
-    int64 per-dim quantization makes the numpy sum order-independent,
-    so results are partition-independent and match the relational
-    twin exactly up to sub-ulp engine log() differences (verified
-    equal on the fixture in tests/test_operators.py).
+    inputs): the one-set case of gaussian_nb_cv_accuracy_sets. Same
+    model as gaussian_nb_cv_accuracy, scored by the broadcast-model
+    Arrow kernel instead of the per-class row-expansion join (at
+    d=21,577 that join explodes 1,866 rows into 40M (dim, x) rows and
+    re-expands them x classes). Returns (fold, n_test, accuracy).
     """
-    import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
+    return gaussian_nb_cv_accuracy_sets(
+        df, {"": [vec_col]}, key_col, label_col, n_folds, salt, var_smoothing
+    ).drop("feature_set")
 
+
+def gaussian_nb_cv_accuracy_sets(
+    df: DataFrame,
+    sets: dict[str, list[str]],
+    key_col: str = "vec_id",
+    label_col: str = "label",
+    n_folds: int = 5,
+    salt: str = "nb",
+    var_smoothing: float = 1e-9,
+    widths: dict[str, int] | None = None,
+) -> DataFrame:
+    """GaussianNB k-fold CV for several feature sets of one frame in one
+    statistics pass and one scoring pass. Returns (feature_set, fold,
+    n_test, accuracy) ordered by (feature_set, fold).
+
+    A feature set is an ordered list of base vector columns of ``df``
+    whose concatenation is the set's vector: ``{"raw_gene": ["v1"],
+    "raw_concat": ["v1", "v2"]}``. Each base column must have one
+    width on every row, and a row with a null base vector takes part
+    in no set. Every set gets exactly the model gaussian_nb_cv_accuracy
+    fits on its vector (same folds, fixed-point statistics, adaptive
+    epsilon and tie-break):
+
+    1. Statistics: ONE _suff_stats job over the concatenation of all
+       base columns, each base counted once however many sets use it.
+       Each set's cells are sliced out of those per-dim cells and
+       renumbered, then assembled by _assemble_model on the driver.
+    2. Scoring: every set's model is broadcast once; one Arrow
+       mapInPandas pass scores each row against every set (int64-
+       quantized per-dim log-likelihoods, so the per-row score does
+       not depend on batching or partitioning), then one
+       groupBy(feature_set, fold) aggregate counts hits.
+
+    ``widths`` gives known base widths. The width of every base but
+    the last (in order of first use) is needed to slice the cells;
+    the missing ones are read from one row in one job.
+    """
     spark = df.sparkSession
+    bases = list(dict.fromkeys(c for cols in sets.values() for c in cols))
+    widths = {c: widths[c] for c in bases if widths and c in widths}
+    missing = [c for c in bases[:-1] if c not in widths]
+    if missing:
+        row = df.select(*[F.size(c) for c in missing]).first()
+        widths.update(zip(missing, row or [0] * len(missing)))
+    bcols = [f"_b{i}" for i in range(len(bases))]
     base = df.select(
         F.col(key_col).alias("id"),
         F.col(label_col).cast("long").alias("y"),
         md5_bucket(key_col, n_folds, salt).alias("fold"),
-        to_double(vec_col).alias("vec"),
+        *[to_double(c).alias(b) for c, b in zip(bases, bcols)],
     )
-    cells = _suff_stats(base)
-    cand_rows, prior_rows = _assemble_model(cells, n_folds, var_smoothing)
+    cells = _suff_stats(base.select("id", "y", "fold", F.concat(*bcols).alias("vec")))
 
+    starts = [0]
+    for c in bases[:-1]:
+        starts.append(starts[-1] + widths[c])
+    if cells:
+        widths[bases[-1]] = max(c["dim"] for c in cells) + 1 - starts[-1]
+    base_cells: dict[str, list] = {c: [] for c in bases}
+    for c in cells:
+        i = bisect.bisect_right(starts, c["dim"]) - 1
+        base_cells[bases[i]].append(
+            (c["fold"], c["y"], c["dim"] - starts[i], c["s1"], c["s2"], c["cnt"])
+        )
+    models = {}
+    for name, cols in sets.items():
+        set_cells, off = [], 0
+        for c in cols:
+            set_cells += [
+                {"fold": f, "y": y, "dim": d + off, "s1": s1, "s2": s2, "cnt": n}
+                for f, y, d, s1, s2, n in base_cells[c]
+            ]
+            off += widths.get(c, 0)
+        models[name] = _fold_models(
+            *_assemble_model(set_cells, n_folds, var_smoothing), n_folds
+        )
+    bmodel = spark.sparkContext.broadcast(models)
+    set_bcols = {name: [bcols[bases.index(c)] for c in cols] for name, cols in sets.items()}
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        m = bmodel.value
+        for pdf in batches:
+            pdf = pdf.dropna(subset=bcols)
+            if not len(pdf):
+                continue
+            xs = {b: np.stack(pdf[b].to_numpy()) for b in bcols}
+            fold = pdf["fold"].to_numpy()
+            y = pdf["y"].to_numpy()
+            out = []
+            for name, cols in set_bcols.items():
+                x_set = (np.concatenate([xs[b] for b in cols], axis=1)
+                         if len(cols) > 1 else xs[cols[0]])
+                for f in np.unique(fold):
+                    if int(f) not in m[name]:
+                        # fold with test rows but no training cells
+                        # anywhere: the relational path emits no
+                        # predictions for that fold — match it.
+                        continue
+                    sel = fold == f
+                    out.append(pd.DataFrame({
+                        "feature_set": name, "fold": int(f), "y": y[sel],
+                        "pred": _predict(m[name][int(f)], x_set[sel]),
+                    }))
+            if out:  # every fold skipped → no predictions this batch
+                yield pd.concat(out, ignore_index=True)
+
+    # fold as long: the relational twin's fold (md5_bucket modulo) is
+    # bigint, and the driver's dtype-strict compare flags int32 vs the
+    # oracle's int64.
+    pred = base.select("fold", "y", *bcols).mapInPandas(
+        score, "feature_set string, fold long, y long, pred long"
+    )
+    return _fold_accuracy(pred, ("feature_set", "fold"))
+
+
+def _fold_models(cand_rows: list, prior_rows: list, n_folds: int) -> dict[int, dict]:
+    """Per test fold: the classes present in training and their
+    (classes x dims) means, variances and log priors as arrays."""
     dims = sorted({d for _, _, d, _, _ in cand_rows})
-    d_all = len(dims)
     model: dict[int, dict] = {}
     for f in range(n_folds):
         classes = sorted({y for ff, y, *_ in cand_rows if ff == f})
         if not classes:
             continue
         c_idx = {y: i for i, y in enumerate(classes)}
-        mu = np.zeros((len(classes), d_all))
-        var = np.ones((len(classes), d_all))
+        mu = np.zeros((len(classes), len(dims)))
+        var = np.ones((len(classes), len(dims)))
         for ff, y, d, m, v in cand_rows:
             if ff == f:
                 mu[c_idx[y], d] = m
@@ -298,48 +409,24 @@ def gaussian_nb_cv_accuracy_wide(
             if ff == f:
                 lp[c_idx[y]] = p
         model[f] = {"classes": np.array(classes), "mu": mu, "var": var, "lp": lp}
-    bmodel = spark.sparkContext.broadcast(model)
+    return model
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = bmodel.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for f, grp in pdf.groupby("fold"):
-                if int(f) not in m:
-                    # fold with test rows but no training cells anywhere
-                    # (model[f] skipped): the relational path emits no
-                    # predictions for that fold — match, don't KeyError.
-                    continue
-                fm = m[int(f)]
-                x = np.stack(grp["vec"].to_numpy())
-                scores = np.empty((len(grp), len(fm["classes"])))
-                for ci in range(len(fm["classes"])):
-                    ll = (
-                        -0.5 * (_LN_2PI + np.log(fm["var"][ci]))
-                        - (x - fm["mu"][ci]) ** 2 / (2.0 * fm["var"][ci])
-                    )
-                    np.maximum(ll, -1e4, out=ll)  # same degenerate-var clamp
-                    # half-away-from-zero, NOT np.rint (ties-to-even):
-                    # Spark/DuckDB round() ties away from zero, and an
-                    # exact-half ll*Q30 under rint would put this kernel
-                    # one grid step off the relational twin / oracle.
-                    q = np_round_half_away(ll * Q30).sum(axis=1)
-                    scores[:, ci] = q / float(Q30) + fm["lp"][ci]
-                # argmax returns the FIRST max: classes ascending ==
-                # the relational score-DESC-then-cls-ASC tie-break
-                pred = fm["classes"][np.argmax(scores, axis=1)]
-                out.append(pd.DataFrame(
-                    {"fold": int(f), "y": grp["y"].to_numpy(), "pred": pred}
-                ))
-            if out:  # every fold skipped → no predictions this batch
-                yield pd.concat(out, ignore_index=True)
 
-    # fold as long: the relational twin's fold (md5_bucket modulo) is
-    # bigint, and the driver's dtype-strict compare flags int32 vs the
-    # oracle's int64.
-    pred = base.select("fold", "y", "vec").mapInPandas(
-        score, "fold long, y long, pred long"
-    )
-    return _fold_accuracy(pred)
+def _predict(fm: dict, x: np.ndarray) -> np.ndarray:
+    """Most likely class per row of x under one fold's model."""
+    scores = np.empty((len(x), len(fm["classes"])))
+    for ci in range(len(fm["classes"])):
+        ll = (
+            -0.5 * (_LN_2PI + np.log(fm["var"][ci]))
+            - (x - fm["mu"][ci]) ** 2 / (2.0 * fm["var"][ci])
+        )
+        np.maximum(ll, -1e4, out=ll)  # same degenerate-var clamp
+        # half-away-from-zero, NOT np.rint (ties-to-even): Spark/DuckDB
+        # round() ties away from zero, and an exact-half ll*Q30 under
+        # rint would put this kernel one grid step off the relational
+        # twin / oracle.
+        q = np_round_half_away(ll * Q30).sum(axis=1)
+        scores[:, ci] = q / float(Q30) + fm["lp"][ci]
+    # argmax returns the FIRST max: classes ascending == the relational
+    # score-DESC-then-cls-ASC tie-break
+    return fm["classes"][np.argmax(scores, axis=1)]

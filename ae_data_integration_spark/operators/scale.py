@@ -75,6 +75,46 @@ def minmax_scale_features(df: DataFrame, features_col: str = "features") -> Data
     )
 
 
+def minmax_scale_per_split(
+    df: DataFrame, features_cols: list[str], split_col: str = "is_train"
+) -> DataFrame:
+    """N1 on several array columns, fit separately on each value of
+    ``split_col`` (the reference's refit-per-split quirk).
+
+    Equal, element for element, to minmax_scale_features run on each
+    column of each split on its own, but with ONE min/max aggregate:
+    grouped by (split, idx) over the concatenation of the columns.
+    Each split's sorted stats array is broadcast-joined back and
+    sliced per column by the row's own widths. Every column must have
+    one width on every row.
+    """
+    stats = (
+        df.select(
+            split_col,
+            F.posexplode(F.concat(*[to_double(c) for c in features_cols])).alias("idx", "v"),
+        )
+        .groupBy(split_col, "idx")
+        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+        .groupBy(split_col)
+        .agg(F.array_sort(F.collect_list(F.struct("idx", "lo", "hi"))).alias("_stats"))
+    )
+    scaled, start = {}, F.lit(1)
+    for c in features_cols:
+        scaled[c] = F.zip_with(
+            to_double(c),
+            F.slice("_stats", start, F.size(c)),
+            lambda x, s: F.when(s["hi"] == s["lo"], F.lit(0.0)).otherwise(
+                (x - s["lo"]) / (s["hi"] - s["lo"])
+            ),
+        )
+        start = start + F.size(c)
+    return (
+        df.join(F.broadcast(stats), split_col)
+        .withColumns(scaled)
+        .select(*df.columns)
+    )
+
+
 def mean_center(df: DataFrame, value_col: str, out_col: str | None = None) -> DataFrame:
     """N3: x - mean(x), with the mean computed as an exact decimal
     sum / count so the result is independent of partition order."""

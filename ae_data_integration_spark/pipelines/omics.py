@@ -35,7 +35,7 @@ from ae_data_integration_spark.operators.inference import _l2norm_rows, embed_wi
 from ae_data_integration_spark.operators.metrics import cluster_metrics, munkres_accuracy
 from ae_data_integration_spark.operators.nb import gaussian_nb_cv_accuracy
 from ae_data_integration_spark.operators.kmeans import kmeans_relational
-from ae_data_integration_spark.operators.scale import label_encode, minmax_scale_features
+from ae_data_integration_spark.operators.scale import label_encode
 from ae_data_integration_spark.operators.splits import stratified_split
 from ae_data_integration_spark.operators.train import (
     _seed_from,
@@ -45,6 +45,7 @@ from ae_data_integration_spark.operators.train import (
     train_full_on_executor,
 )
 from ae_data_integration_spark.functions.caching import persist_tracked
+from ae_data_integration_spark.pipelines.report_full import scale_views_per_split
 from ae_data_integration_spark.sources.matrix_io import (
     align_views,
     assert_aligned,
@@ -170,25 +171,12 @@ def run_reference_pipeline(
     # step 3: stratified split (R1) + per-split min-max scale (N1,
     # refit-per-split quirk) on each view
     split = stratified_split(both, "label", "sample_id", train_prop, salt="42")
-    train_df = split.filter(F.col("is_train"))
-    test_df = split.filter(~F.col("is_train"))
-
-    def scale_views(df: DataFrame) -> DataFrame:
-        out = df.withColumnRenamed("features_v1", "features")
-        out = minmax_scale_features(out, "features").withColumnRenamed(
-            "features", "features_v1"
-        )
-        out = out.withColumnRenamed("features_v2", "features")
-        out = minmax_scale_features(out, "features").withColumnRenamed(
-            "features", "features_v2"
-        )
-        return out
-
-    train_scaled = scale_views(train_df)
-    test_scaled = scale_views(test_df)
+    scaled = scale_views_per_split(split)
+    train_scaled = scaled.filter(F.col("is_train"))
+    test_scaled = scaled.filter(~F.col("is_train"))
     split_counts = {
-        "n_train": train_df.count(),
-        "n_test": test_df.count(),
+        "n_train": split.filter(F.col("is_train")).count(),
+        "n_test": split.filter(~F.col("is_train")).count(),
     }
 
     # step 4: model selection — n_trials × k-fold CV on the training

@@ -10,15 +10,24 @@ from the two raw matrix files:
     ingest both views (S1 melt-transpose) → align (P1) → labels (P2)
     → seed-42 stratified split (R1) → per-split min-max scale (N1)
     → per-feature-set vectors (raw / C8 spec inference / J6 concat)
-    → GaussianNB k-fold CV per set (C6) → tidy summary table
+    → GaussianNB k-fold CV of every set in shared passes (C6)
+    → tidy summary table
 
-Scale design: every stage is the operator already scale-audited in
-its own module — the matrices stream through one sample-keyed
-shuffle (sources/matrix_io), inference is Arrow-batched mapInPandas
-with broadcast weights (operators/inference), NB is two distributed
-passes with a model-sized driver assembly (operators/nb). The only
-driver-held state is model-sized: NB sufficient statistics and the
-12-row summary.
+Scale design: a fixed handful of Spark jobs, whatever the number of
+feature sets — the matrices stream through one sample-keyed shuffle
+(sources/matrix_io) and are persisted; the alignment gate is one
+job; the stratified split runs on the (sample_id, label) keys only
+and its flags are broadcast back; ONE min/max aggregate grouped by
+(split, feature) over the concatenated views scales both views of
+both splits (operators/scale.minmax_scale_per_split). Then every
+feature set shares one GaussianNB statistics pass and one Arrow
+scoring pass (operators/nb.gaussian_nb_cv_accuracy_sets) over one
+sample-keyed frame: the views plus every derived vector (AE
+inference, Arrow-batched with broadcast weights; JIVE scores;
+extras), gathered by one union + groupBy and broadcast onto the
+views. What is collected is model-sized (class counts, NB sufficient
+statistics, the summary rows); per-sample rows reach the driver only
+as broadcasts of split flags and the narrow derived vectors.
 
 JIVE note: the reference does not COMPUTE JIVE — it loads component
 scores produced offline by the R `r.jive` package and concatenates
@@ -34,16 +43,18 @@ from __future__ import annotations
 
 import math
 from collections.abc import Iterator
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ae_data_integration_spark.models.specs import ARCHITECTURES
+from ae_data_integration_spark.functions.arrays import to_double
+from ae_data_integration_spark.models.specs import ARCHITECTURES, embedding_dim
 from ae_data_integration_spark.operators.inference import embed_and_recon
-from ae_data_integration_spark.operators.nb import gaussian_nb_cv_accuracy
-from ae_data_integration_spark.operators.scale import label_encode, minmax_scale_features
+from ae_data_integration_spark.operators.nb import gaussian_nb_cv_accuracy_sets
+from ae_data_integration_spark.operators.scale import minmax_scale_per_split
 from ae_data_integration_spark.operators.splits import stratified_split
 from ae_data_integration_spark.sources.matrix_io import (
     align_views,
@@ -54,18 +65,11 @@ from ae_data_integration_spark.sources.matrix_io import (
 
 
 def scale_views_per_split(df: DataFrame) -> DataFrame:
-    """N1 on both views of one split (the reference's refit-per-split
-    quirk: scaler fit on train and test INDEPENDENTLY,
-    Data_prep.py:61-67)."""
-    out = df.withColumnRenamed("features_v1", "features")
-    out = minmax_scale_features(out, "features").withColumnRenamed(
-        "features", "features_v1"
-    )
-    out = out.withColumnRenamed("features_v2", "features")
-    out = minmax_scale_features(out, "features").withColumnRenamed(
-        "features", "features_v2"
-    )
-    return out
+    """N1 on both views, fit per value of ``is_train`` (the reference's
+    refit-per-split quirk: scaler fit on train and test INDEPENDENTLY,
+    Data_prep.py:61-67) — one min/max aggregate for both views and
+    both splits."""
+    return minmax_scale_per_split(df, ["features_v1", "features_v2"], "is_train")
 
 
 def projection_scores(
@@ -130,36 +134,51 @@ def prepare_scaled_views(
     (all_scaled with int labels, split_counts, (d1, d2))."""
     # The melt-transpose is the expensive lineage step at real width
     # (38M cells through one sample-keyed shuffle); persist both views
-    # so the alignment gate, split counts, and the four per-split
-    # scale passes never recompute it.
+    # so the alignment gate, the split and the scale pass never
+    # recompute it.
     v1 = read_matrix_wide(spark, view1_path).persist()
     v2 = read_matrix_wide(spark, view2_path).persist()
     assert_aligned(v1, v2)
     both = derive_labels(align_views(v1, v2))
-    split = stratified_split(both, "label", "sample_id", train_prop, salt="42")
-    train_df = split.filter(F.col("is_train"))
-    test_df = split.filter(~F.col("is_train"))
-    split_counts = {"n_train": train_df.count(), "n_test": test_df.count()}
-
-    all_scaled = scale_views_per_split(train_df).unionByName(
-        scale_views_per_split(test_df)
-    )
-    enc = label_encode(
-        split.select("sample_id", "label"), "label", "label_id"
-    ).select("sample_id", F.col("label_id").cast("int").alias("y"))
-    all_scaled = (
-        all_scaled.join(F.broadcast(enc), "sample_id")
-        .select("sample_id", F.col("y").alias("label"),
-                "features_v1", "features_v2")
-        .persist()
-    )
-    dims = all_scaled.select(
-        F.size("features_v1").alias("d1"), F.size("features_v2").alias("d2")
-    ).first()
-    all_scaled.count()  # materialize, then release the source caches
+    # R1 on the (sample_id, label) keys only: the per-class window
+    # sorts keys, not vector rows, and the flags are broadcast back.
+    flags = stratified_split(
+        both.select("sample_id", "label"), "label", "sample_id", train_prop, salt="42"
+    ).persist()
+    try:
+        per_class = flags.groupBy("label").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("is_train").cast("int")).alias("n_train"),
+        ).collect()
+        n_train = sum(r["n_train"] for r in per_class)
+        split_counts = {
+            "n_train": n_train, "n_test": sum(r["n"] for r in per_class) - n_train
+        }
+        # N4 codes from the same class list: position among the sorted
+        # distinct labels, the numbering label_encode gives
+        labels = F.array(*[F.lit(lab) for lab in sorted(r["label"] for r in per_class)])
+        all_scaled = (
+            scale_views_per_split(
+                both.join(F.broadcast(flags.select("sample_id", "is_train")), "sample_id")
+            )
+            .select(
+                "sample_id",
+                (F.array_position(labels, F.col("label")) - 1).cast("int").alias("label"),
+                "features_v1",
+                "features_v2",
+            )
+            .persist()
+        )
+        # materialize, then release the source caches; the same job reads
+        # the view widths
+        d1, d2 = all_scaled.agg(
+            F.max(F.size("features_v1")), F.max(F.size("features_v2"))
+        ).first()
+    finally:
+        flags.unpersist()
     v1.unpersist()
     v2.unpersist()
-    return all_scaled, split_counts, (int(dims["d1"]), int(dims["d2"]))
+    return all_scaled, split_counts, (int(d1), int(d2))
 
 
 def nb_feature_set_report(
@@ -183,9 +202,10 @@ def nb_feature_set_report(
     ``prepared`` short-circuits ingestion with an existing
     prepare_scaled_views result (the caller keeps ownership of its
     persist). ``extra_sets`` appends caller-supplied feature frames
-    (sample_id, label, vec) to the comparison — e.g. the embedding of
-    an actually-RETRAINED model from run_reference_pipeline, the
-    notebook's cells 88-106 flow.
+    (sample_id, vec) to the comparison — e.g. the embedding of an
+    actually-RETRAINED model from run_reference_pipeline, the
+    notebook's cells 88-106 flow. An extra frame must hold one vector
+    for every sample; it is scored against the report's labels.
     """
     archs = tuple(ARCHITECTURES) if archs is None else archs
     if prepared is None:
@@ -194,71 +214,87 @@ def nb_feature_set_report(
         )
     else:
         all_scaled, split_counts, (d1, d2) = prepared
-    labels = all_scaled.select("sample_id", "label")
 
-    def nb_rows(vec_df: DataFrame, dim: int, name: str) -> dict:
-        # scorer="auto" with the KNOWN width passed through: the raw
-        # 20,531/21,577-d sets route through the broadcast-model Arrow
-        # kernel (bit-equal to the relational scorer, measured 8x
-        # faster at width — operators/nb.py), embedding-sized sets
-        # stay relational; dim= skips the per-call width-probe job
-        # (previously the embedding join ran once just for the probe).
-        rows = gaussian_nb_cv_accuracy(
-            vec_df, "sample_id", "label", "vec", n_folds=n_folds, salt="nb",
-            scorer="auto", dim=dim,
-        ).collect()
-        accs = [r["accuracy"] for r in sorted(rows, key=lambda r: r["fold"])]
-        mean = sum(accs) / len(accs)
-        return {
-            "feature_set": name,
-            "dim": dim,
-            "folds": len(accs),
-            "acc_mean": mean,
-            "acc_std": math.sqrt(sum((a - mean) ** 2 for a in accs) / len(accs)),
-        }
-
-    out = []
     # Raw feature sets (cells 119-120: Gene / miRNA / concatenated).
-    out.append(nb_rows(
-        all_scaled.select("sample_id", "label",
-                          F.col("features_v1").alias("vec")),
-        d1, "raw_gene"))
-    out.append(nb_rows(
-        all_scaled.select("sample_id", "label",
-                          F.col("features_v2").alias("vec")),
-        d2, "raw_mirna"))
-    out.append(nb_rows(
-        all_scaled.select("sample_id", "label",
-                          F.concat("features_v1", "features_v2").alias("vec")),
-        d1 + d2, "raw_concat"))
+    sets = {
+        "raw_gene": ["features_v1"],
+        "raw_mirna": ["features_v2"],
+        "raw_concat": ["features_v1", "features_v2"],
+    }
+    widths = {"features_v1": d1, "features_v2": d2}
+    # Derived sets, one (sample_id, vec) frame and width each: the 8
+    # AE embeddings (cells 88-106 extraction → 121 comparison) from
+    # spec-built deterministic weights at the REAL view widths, the
+    # JIVE baseline (cells 108-116 → 124: J6 concat of joint +
+    # per-view component scores) and the caller's extras.
+    derived = {
+        f"ae_{arch}": (
+            embed_and_recon(
+                all_scaled, arch, "sample_id", view_dims=(d1, d2), key_type="string"
+            ).select("sample_id", F.col("embedding").alias("vec")),
+            embedding_dim(arch),
+        )
+        for arch in archs
+    }
+    derived["jive_concat"] = (
+        projection_scores(all_scaled, (d1, d2), rank=jive_rank)
+        .select("sample_id", F.col("scores").alias("vec")),
+        3 * jive_rank,
+    )
+    extras = extra_sets or {}
+    derived.update({name: (df.select("sample_id", "vec"), None) for name, df in extras.items()})
 
-    # The 8 AE embeddings (cells 88-106 extraction → 121 comparison),
-    # spec-built deterministic weights at the REAL view widths.
-    for arch in archs:
-        emb = embed_and_recon(
-            all_scaled, arch, "sample_id", view_dims=(d1, d2),
-            key_type="string",
-        ).join(F.broadcast(labels), "sample_id")
-        emb_dim = len(emb.select("embedding").first()[0])
-        out.append(nb_rows(
-            emb.select("sample_id", "label", F.col("embedding").alias("vec")),
-            emb_dim, f"ae_{arch}"))
-
-    # JIVE baseline (cells 108-116 → 124): J6 concat of joint +
-    # per-view component scores.
-    jive = projection_scores(
-        all_scaled, (d1, d2), rank=jive_rank
-    ).join(F.broadcast(labels), "sample_id")
-    out.append(nb_rows(
-        jive.select("sample_id", "label", F.col("scores").alias("vec")),
-        3 * jive_rank, "jive_concat"))
-
-    for name, vec_df in (extra_sets or {}).items():
-        dim = len(vec_df.select("vec").first()[0])
-        out.append(nb_rows(vec_df, dim, name))
-
+    # One sample-keyed frame of every derived vector (a union and one
+    # groupBy, whatever the number of sets), persisted so the NB
+    # statistics and scoring passes run the inference once, then
+    # broadcast onto the scaled views.
+    cols = {name: f"_d{i}" for i, name in enumerate(derived)}
+    long = reduce(DataFrame.unionByName, [
+        df.select("sample_id", F.lit(cols[name]).alias("_set"), to_double("vec").alias("vec"))
+        for name, (df, _) in derived.items()
+    ])
+    wide = long.groupBy("sample_id").agg(*[
+        F.first(F.when(F.col("_set") == c, F.col("vec")), ignorenulls=True).alias(c)
+        for c in cols.values()
+    ]).persist()
+    sets.update({name: [c] for name, c in cols.items()})
+    widths.update({cols[name]: w for name, (_, w) in derived.items()})
+    try:
+        if extras:
+            extra_cols = [cols[name] for name in extras]
+            widths.update(zip(extra_cols, wide.select(*map(F.size, extra_cols)).first()))
+        acc = gaussian_nb_cv_accuracy_sets(
+            all_scaled.join(F.broadcast(wide), "sample_id"), sets, "sample_id", "label",
+            n_folds=n_folds, salt="nb", widths=widths,
+        ).collect()
+    finally:
+        wide.unpersist()
     if prepared is None:
         all_scaled.unpersist()
+
+    accs: dict[str, list[float]] = {name: [] for name in sets}
+    n_scored = dict.fromkeys(sets, 0)
+    for r in acc:  # ordered by (feature_set, fold)
+        accs[r["feature_set"]].append(r["accuracy"])
+        n_scored[r["feature_set"]] += r["n_test"]
+    n_samples = split_counts["n_train"] + split_counts["n_test"]
+    for name in extras:
+        if n_scored[name] != n_samples:
+            raise ValueError(
+                f"extra set {name!r} scored {n_scored[name]} of {n_samples} samples"
+            )
+    out = []
+    for name, set_cols in sets.items():
+        mean = sum(accs[name]) / len(accs[name])
+        out.append({
+            "feature_set": name,
+            "dim": sum(widths[c] for c in set_cols),
+            "folds": len(accs[name]),
+            "acc_mean": mean,
+            "acc_std": math.sqrt(
+                sum((a - mean) ** 2 for a in accs[name]) / len(accs[name])
+            ),
+        })
     summary = spark.createDataFrame(
         pd.DataFrame(out),
         "feature_set string, dim int, folds int, acc_mean double, acc_std double",

@@ -128,9 +128,24 @@ def align_views(
 
 
 def assert_aligned(v1: DataFrame, v2: DataFrame, on: str = "sample_id") -> None:
-    """Alignment gate: abort when the sample universes differ."""
-    n1, n2 = v1.count(), v2.count()
-    nj = align_views(v1, v2, on).count()
+    """Alignment gate: abort when the sample universes differ.
+
+    One job: per key, c1 and c2 count its rows in each view. Then
+    |v1| = Σc1, |v2| = Σc2 and |v1⋈v2| = Σc1·c2 over non-null keys
+    (an inner join pairs every copy of a key with every copy on the
+    other side), so duplicated ids are caught like missing ones.
+    """
+    tagged = v1.select(on, F.lit(1).alias("_c1"), F.lit(0).alias("_c2")).unionByName(
+        v2.select(on, F.lit(0).alias("_c1"), F.lit(1).alias("_c2"))
+    )
+    per_key = tagged.groupBy(on).agg(F.sum("_c1").alias("c1"), F.sum("_c2").alias("c2"))
+    n1, n2, nj = per_key.agg(
+        F.coalesce(F.sum("c1"), F.lit(0)),
+        F.coalesce(F.sum("c2"), F.lit(0)),
+        F.coalesce(
+            F.sum(F.when(F.col(on).isNotNull(), F.col("c1") * F.col("c2"))), F.lit(0)
+        ),
+    ).first()
     if not (n1 == n2 == nj):
         raise ValueError(
             f"views misaligned: |v1|={n1} |v2|={n2} |v1⋈v2|={nj}"

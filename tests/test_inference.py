@@ -8,7 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from ae_data_integration_spark.functions.arrays import slice_features, to_double
-from ae_data_integration_spark.models.specs import ARCHITECTURES, build_weights
+from ae_data_integration_spark.models.specs import (
+    ARCHITECTURES,
+    build_weights,
+    embedding_dim,
+)
 from ae_data_integration_spark.operators.inference import (
     _l2norm_rows,
     ae_forward,
@@ -64,6 +68,12 @@ def test_embedding_dims_follow_spec(spark, views):
     }
     # CNC: joint 8; MM: 8+8; JISAE: 8+8+8; MOCSS: mean-shared 8 + 8 + 8.
     assert dims == {"CNC": 8, "MM": 16, "JISAE": 24, "MOCSS": 24}
+    # the spec-side width the report uses instead of a probe job
+    assert {arch: embedding_dim(arch) for arch in dims} == dims
+    for arch in ARCHITECTURES:
+        z, _, _ = ae_forward(np.zeros((1, 32)), np.zeros((1, 32)), arch,
+                             build_weights(arch))
+        assert z.shape[1] == embedding_dim(arch), arch
 
 
 def test_weights_deterministic():

@@ -64,6 +64,26 @@ def test_alignment_gate(spark, matrix_tsv):
         assert_aligned(v, bad)
 
 
+def test_alignment_gate_duplicate_and_missing_ids(spark):
+    """The one-job gate counts |v1⋈v2| as Σ c1·c2 per key: a duplicated
+    id on either side or in both, and a missing id, each raise."""
+    def view(ids):
+        return spark.createDataFrame(
+            [(s, [1.0]) for s in ids], "sample_id string, features array<double>"
+        )
+
+    ids = ["a.1", "a.2", "b.1"]
+    assert_aligned(view(ids), view(list(reversed(ids))))
+    for v1, v2 in (
+        (ids + ["a.1"], ids),            # duplicated on one side
+        (ids + ["a.1"], ids + ["a.1"]),  # duplicated on both: 4 join rows
+        (ids[:-1], ids),                 # missing
+        (ids, ids[:-1] + ["c.1"]),       # same sizes, different ids
+    ):
+        with pytest.raises(ValueError, match="misaligned"):
+            assert_aligned(view(v1), view(v2))
+
+
 def test_long_to_wide_orders_by_feature_idx(spark):
     rows = [("s1", 2, 30.0), ("s1", 0, 10.0), ("s1", 1, 20.0)]
     long = spark.createDataFrame(rows, "sample_id string, feature_idx long, value double")
